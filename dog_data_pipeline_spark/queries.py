@@ -11388,70 +11388,70 @@ def funnel_step_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _PRIORITY_ORDER = [
-    # ---- round-13 rotation: GENERATED by tools/window_rotation.py
+    # ---- round-14 rotation: GENERATED by tools/window_rotation.py
     # (flagship + never-driver-checked + stalest certified tail).
     # ZERO new queries this round (optimization round — no features),
     # so all 49 rotating slots go to the stale tail: the 8 remaining
-    # r8 rows and the 41 stalest r9 rows, every one previously
+    # r9 rows and the 41 stalest r10 rows, every one previously
     # driver-green. Forward simulation (--check) shows zero cadence
     # violations at the 5-round bound.
-    "flagship_segment_stats",  # r12
-    "supplier_count_by_part_attrs",  # r8
-    "top_bigrams",  # r8
-    "top_revenue_supplier",  # r8
-    "training_shuffle_order",  # r8
-    "video_scene_cuts",  # r8
-    "volume_shipping",  # r8
-    "weighted_priority_sample",  # r8
-    "zorder_locality_report",  # r8
-    "anti_join_idempotence",  # r9
-    "approx_distinct_parts",  # r9
-    "asof_join_latest_event",  # r9
-    "bigram_lm_scores",  # r9
-    "broadcast_dim_join",  # r9
-    "classifier_calibration_bins",  # r9
-    "cohort_retention",  # r9
-    "copurchase_triangle_stats",  # r9
-    "dead_letter_split",  # r9
-    "decayed_engagement",  # r9
-    "dense_sequential_ids",  # r9
-    "dp_release_report",  # r9
-    "dsir_selection_report",  # r9
-    "embedding_pca_report",  # r9
-    "embedding_space_audit",  # r9
-    "event_funnel",  # r9
-    "event_transitions",  # r9
-    "filter_agreement_audit",  # r9
-    "filter_project_in",  # r9
-    "hard_negative_mining",  # r9
-    "incoherent_span_stats",  # r9
-    "json_props_extract",  # r9
-    "kmeans_corpus_clusters",  # r9
-    "knn_ivf_index_compacted",  # r9
-    "knn_ivf_index_pq",  # r9
-    "last_touch_attribution",  # r9
-    "length_bucket_padding",  # r9
-    "map_array_functions",  # r9
-    "market_basket_rules",  # r9
-    "ngram_novelty_profile",  # r9
-    "ordered_collect_seq",  # r9
-    "pagerank_event_graph",  # r9
-    "per_source_quality_quota",  # r9
-    "pmi_collocations",  # r9
-    "range_join_event_pairs",  # r9
-    "robust_outlier_report",  # r9
-    "scd2_event_type_history",  # r9
-    "schema_evolution_roundtrip",  # r9
-    "semantic_contamination",  # r9
-    "shipmode_priority_counts",  # r9
-    "split_leakage_audit",  # r9
+    "flagship_segment_stats",  # r13
+    "stream_ivf_ingest",  # r9
+    "table_profile_orders",  # r9
+    "time_weighted_value_avg",  # r9
+    "tracking_pipeline_samples",  # r9
+    "tumbling_daily_counts",  # r9
+    "union_ledger",  # r9
+    "url_canonicalization_report",  # r9
+    "vocab_oov_report",  # r9
+    "audio_feature_summary",  # r10
+    "benchmark_contamination",  # r10
+    "bpe_token_counts",  # r10
+    "busy_window_detail",  # r10
+    "catalog_file_join",  # r10
+    "completeness_users",  # r10
+    "concurrent_user_overlaps",  # r10
+    "conditional_freq_users",  # r10
+    "corpus_curation",  # r10
+    "correlated_subquery_above_avg",  # r10
+    "cube_order_stats",  # r10
+    "derived_keys",  # r10
+    "distinct_agg",  # r10
+    "doc_fingerprint",  # r10
+    "embedding_near_dups",  # r10
+    "exact_dedup_groups",  # r10
+    "funnel_step_latency",  # r10
+    "group_max_pad",  # r10
+    "image_dir_sink_stats",  # r10
+    "image_resize_stats",  # r10
+    "ivf_generation_pointer",  # r10
+    "key_formatting",  # r10
+    "knn_cosine_topk",  # r10
+    "knn_ivf_index_persisted",  # r10
+    "lang_id_heuristic",  # r10
+    "large_order_customers",  # r10
+    "market_share",  # r10
+    "min_cost_supplier",  # r10
+    "nation_trade_volume",  # r10
+    "ngram_jaccard_dedup",  # r10
+    "ntile_value_quartiles",  # r10
+    "pricing_summary",  # r10
+    "priority_status_independence",  # r10
+    "promo_revenue_share",  # r10
+    "range_frame_window",  # r10
+    "recode_fallthrough",  # r10
+    "regional_revenue",  # r10
+    "repetition_quality_filter",  # r10
+    "resume_offset",  # r10
+    "returned_item_report",  # r10
+    "rollup_revenue",  # r10
 ]
 # NOTE: the list holds exactly 50 names — the driver's window.
-# Round-13 rotation math: 1 flagship + 0 never-checked + 49 stalest
-# (8 x r8 + 41 x r9) = 50. Generated by `python tools/window_rotation.py`;
-# deferred names are all r9/r10/r11/r12-green and stay under the
-# driver-strict local oracle mirror (tests/test_queries_oracle.py)
-# until their rotation slot comes up.
+# Round-14 rotation math: 1 flagship + 0 never-checked + 49 stalest
+# (8 x r9 + 41 x r10) = 50. Generated by `python tools/window_rotation.py`;
+# the 155 deferred names are all r10/r11/r12/r13-green (8/49/49/49) and
+# stay under the driver-strict local oracle mirror
+# (tests/test_queries_oracle.py) until their rotation slot comes up.
 
 
 def _apply_registry_order() -> None:

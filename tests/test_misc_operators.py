@@ -452,8 +452,9 @@ def test_window_rotation_planner_invariants():
     assert wr.cadence_violations(
         names, "flagship_segment_stats", list(_PRIORITY_ORDER)
     ) == []
-    # the bound itself is part of the contract (5 = natural 4-round
-    # cadence for 197 queries / 49 rotating slots + one round of slack)
+    # the bound itself is part of the contract (5 = natural cadence
+    # ceil(204 / 49) for 205 queries / 49 rotating slots, no spare
+    # round; the margin is capacity() headroom, 246 - 205 = 41 queries)
     assert wr.MAX_CADENCE == 5
     # r11 verdict ask #5 — window-capacity rule: a 50-slot window
     # (1 flagship + 49 rotating) can keep at most 49*5+1 = 246 queries

@@ -2,8 +2,9 @@
 window from the recorded CORRECTNESS_r*.json history instead of
 hand-picking it.
 
-With ~200 registry queries and a 50-slot per-round driver window, full
-re-certification cadence is ~4 rounds; each round's `_PRIORITY_ORDER`
+With 205 registry queries and a 50-slot per-round driver window (1
+flagship + 49 rotating), full re-certification cadence is
+ceil(204 / 49) = 5 rounds; each round's `_PRIORITY_ORDER`
 should hold (a) the flagship, (b) every never-driver-checked query
 (new this round — the freeze-then-build rule says they MUST take a
 slot in the same commit that lands them), and (c) the stalest-
@@ -40,8 +41,9 @@ sys.path.insert(0, HERE)
 WINDOW = 50
 # A registry query's driver certificate must be refreshed at least
 # every MAX_CADENCE rounds under the rotation (r7 verdict ask #4).
-# With 197 queries and 49 rotating slots the natural cadence is 4
-# rounds; 5 leaves one round of slack for a burst of new landings.
+# With 205 queries and 49 rotating slots the natural cadence is
+# ceil(204 / 49) = 5 rounds, so the bound holds with no spare round;
+# the margin is capacity() headroom (246 - 205 = 41 queries).
 MAX_CADENCE = 5
 
 
