@@ -381,15 +381,16 @@ def profile_table(
     """
     from dog_data_pipeline_spark.operators.dedup import _spread
 
-    if cols is None:
-        cols = list(df.columns)
+    # de-duplicated once: a repeated name would alias its statistics
+    # twice and make every later reference ambiguous
+    cols = list(dict.fromkeys(df.columns if cols is None else cols))
     dtypes = dict(df.dtypes)
     # _spread: exact_distinct's Expand multiplies the scan |cols|-fold
     # INSIDE the partial aggregate, and a single-file table reads as one
     # scan task — profiled at sf0.1 as a 1.7 s single-task job on a
     # 32-core session. All statistics here are order-independent, so
     # the round-robin repartition changes nothing but the fan-out.
-    df = _spread(df.select(*dict.fromkeys(cols)))
+    df = _spread(df.select(*cols))
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in cols:
         aggs.append(

@@ -2226,12 +2226,17 @@ def text_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     out = with_quality_score(docs, "text")
+    # round as DuckDB does: the binary product x * 10^4, half away from
+    # zero. F.round(x, 4) rounds x's shortest decimal string HALF_UP, and
+    # the two disagree on near-ties: 0.49824999999999997 * 10^4 is
+    # exactly 4982.5 (DuckDB 0.4983, F.round 0.4982).
     return out.select(
         "doc_id",
         F.col("n_tokens").cast("int").alias("n_tokens"),
-        F.round("stopword_ratio", 4).alias("stopword_ratio"),
-        F.round("alpha_ratio", 4).alias("alpha_ratio"),
-        F.round("quality", 4).alias("quality"),
+        *(
+            (F.round(F.col(c) * 1e4) / 1e4).alias(c)
+            for c in ("stopword_ratio", "alpha_ratio", "quality")
+        ),
     )
 
 
@@ -2623,15 +2628,28 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # coverage. Each query WRITES through the engine's sink, READS back
 # through its scan, and returns rows the oracle recomputes from the base
 # tables — a full-fidelity roundtrip certificate (any write/read/schema
-# drift hash-mismatches). Outputs land in a fresh mkdtemp dir under the
-# system temp root (small at oracle scale; /tmp is ephemeral).
+# drift hash-mismatches). Outputs land in a fresh mkdtemp dir under one
+# per-process ``ddps_*`` root in the system temp dir, removed when the
+# interpreter exits (a returned DataFrame may read its files until then).
 # ---------------------------------------------------------------------------
+
+_ROUNDTRIP_ROOT: dict[int, str] = {}  # creating pid -> root
 
 
 def _roundtrip_dir(name: str) -> str:
+    import atexit
+    import os
+    import shutil
     import tempfile
 
-    return tempfile.mkdtemp(prefix=f"ddps_{name}_")
+    pid = os.getpid()
+    if pid not in _ROUNDTRIP_ROOT:
+        root = _ROUNDTRIP_ROOT[pid] = tempfile.mkdtemp(prefix="ddps_")
+        # a forked child inherits the handler but must not remove the root
+        atexit.register(
+            lambda: os.getpid() == pid and shutil.rmtree(root, ignore_errors=True)
+        )
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=_ROUNDTRIP_ROOT[pid])
 
 
 def _arrow_local(spark: SparkSession, pdf, schema: str) -> DataFrame:
@@ -3101,8 +3119,6 @@ def _staged_bounded_stream(spark, df, tmp: str, n_files: int, split_col: str):
     import os
     import shutil
 
-    src = os.path.join(tmp, "src")
-    os.makedirs(src, exist_ok=True)
     stage = os.path.join(tmp, "stage")
     (
         df.withColumn("__b", F.col(split_col) % n_files)
@@ -3111,8 +3127,38 @@ def _staged_bounded_stream(spark, df, tmp: str, n_files: int, split_col: str):
         .mode("overwrite")
         .parquet(stage)
     )
+    try:
+        src = _take_staged_batches(stage, tmp, n_files, split_col)
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+def _take_staged_batches(bucket_root: str, tmp: str, n_files: int, split_col: str) -> str:
+    """Move the single data file of each ``__b=k`` dir under
+    ``bucket_root`` to ``{tmp}/src/batch_{k}.parquet``; return that
+    source dir. A row whose ``split_col`` is null or negative lands in a
+    bucket outside 0..n_files-1 that would never be staged: raise
+    instead of dropping it."""
+    import os
+
+    src = os.path.join(tmp, "src")
+    os.makedirs(src, exist_ok=True)
+    if not os.path.isdir(bucket_root):  # an empty side stages nothing
+        return src
+    buckets = {d for d in os.listdir(bucket_root) if d.startswith("__b=")}
+    stray = sorted(buckets - {f"__b={k}" for k in range(n_files)})
+    if stray:
+        raise ValueError(
+            f"{split_col} must be non-null and non-negative to stage a "
+            f"bounded stream; rows landed in {stray}"
+        )
     for k in range(n_files):
-        bdir = os.path.join(stage, f"__b={k}")
+        bdir = os.path.join(bucket_root, f"__b={k}")
         if not os.path.isdir(bdir):  # an empty split stages no file
             continue
         part = next(
@@ -3121,28 +3167,24 @@ def _staged_bounded_stream(spark, df, tmp: str, n_files: int, split_col: str):
         os.replace(
             os.path.join(bdir, part), os.path.join(src, f"batch_{k}.parquet")
         )
-    shutil.rmtree(stage, ignore_errors=True)
-    return (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    return src
 
 
-def _staged_bounded_streams(spark, sides, n_files: int, split_col: str):
+def _staged_bounded_streams(
+    spark, sides, stage: str, n_files: int, split_col: str
+):
     """``_staged_bounded_stream`` for SEVERAL same-schema frames in ONE
     partitionBy write (r13 setup trim): the sides union under a side
-    tag, one job writes partitionBy(side, bucket), and each group's
-    single data file moves into its side's flat source dir. Returns one
-    bounded stream per side, identical in file content and replay shape
-    to staging each side separately — the repartition keys on
-    (side, bucket) so every group still lands in exactly one task and
+    tag, one job writes partitionBy(side, bucket) under ``stage``, and
+    each group's single data file moves into its side's flat source dir.
+    Returns one bounded stream per side, identical in file content and
+    replay shape to staging each side separately — the repartition keys
+    on (side, bucket) so every group still lands in exactly one task and
     stages exactly one file. ``sides`` = [(df, tmp), ...]."""
     import os
     import shutil
     from functools import reduce
 
-    stage = os.path.join(sides[0][1], "..", "stage_all")
     tagged = [
         df.withColumn("__side", F.lit(i)).withColumn(
             "__b", F.col(split_col) % n_files
@@ -3156,27 +3198,21 @@ def _staged_bounded_streams(spark, sides, n_files: int, split_col: str):
         .mode("overwrite")
         .parquet(stage)
     )
-    out = []
-    for i, (df, tmp) in enumerate(sides):
-        src = os.path.join(tmp, "src")
-        os.makedirs(src, exist_ok=True)
-        for k in range(n_files):
-            bdir = os.path.join(stage, f"__side={i}", f"__b={k}")
-            if not os.path.isdir(bdir):  # an empty split stages no file
-                continue
-            part = next(
-                f for f in sorted(os.listdir(bdir)) if f.endswith(".parquet")
+    try:
+        srcs = [
+            _take_staged_batches(
+                os.path.join(stage, f"__side={i}"), tmp, n_files, split_col
             )
-            os.replace(
-                os.path.join(bdir, part), os.path.join(src, f"batch_{k}.parquet")
-            )
-        out.append(
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-    shutil.rmtree(stage, ignore_errors=True)
-    return out
+            for i, (_, tmp) in enumerate(sides)
+        ]
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    return [
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        for (df, _), src in zip(sides, srcs)
+    ]
 
 
 def _staged_time_ordered_stream(
@@ -3368,7 +3404,11 @@ def stream_interval_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side) is untouched; only the setup jobs are fewer.
     n_rows = slim.filter(F.col("event_type").isin("purchase", "click")).count()
     left, right = _staged_bounded_streams(
-        spark, [(purchases, tmp + "/l"), (clicks, tmp + "/r")], 2, "event_id"
+        spark,
+        [(purchases, tmp + "/l"), (clicks, tmp + "/r")],
+        tmp + "/stage_all",
+        2,
+        "event_id",
     )
     joined = interval_join_streams(
         left,

@@ -23,12 +23,24 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _cpus() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``, else 24g capped at half the machine's
+    physical memory (local mode: the driver heap is the executor heap)."""
+    phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{max(1, min(24, phys_gb // 2))}g"
+
+
 def get_spark(
     app_name: str = "dog-data-pipeline-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
@@ -42,7 +54,7 @@ def get_spark(
         # local mode: driver == executor, and Spark's 1g default heap is
         # the first thing to fall over on join fan-outs; size it to the
         # box (this is a build-time conf — no effect on running sessions)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
     )
@@ -83,7 +95,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     subset of our tuning that can be set post-startup (timezone, AQE,
     shuffle partitions). Static configs (memory, master) are left alone.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _cpus()
     for k, v in [
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.adaptive.enabled", "true"),

@@ -127,17 +127,23 @@ def stream_ivf_ingest(
     stream_identity = _checkpoint_identity(checkpoint_dir)
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        op = ivf_upsert if upsert else ivf_append
-        stats = op(
-            batch,
-            path,
-            skew_bound=skew_bound,
-            lock_timeout_s=lock_timeout_s,
-            batch_id=batch_id,
-            stream_id=stream_identity,
-        )
+        # persisted so the emptiness probe and the append (an upsert reads
+        # the batch twice more) share one read of the source
+        batch = batch.persist()
+        try:
+            if batch.isEmpty():
+                return
+            op = ivf_upsert if upsert else ivf_append
+            stats = op(
+                batch,
+                path,
+                skew_bound=skew_bound,
+                lock_timeout_s=lock_timeout_s,
+                batch_id=batch_id,
+                stream_id=stream_identity,
+            )
+        finally:
+            batch.unpersist()
         if stats.get("skipped_replay"):
             logger.warning(
                 "stream_ivf_ingest: batch %s skipped as replay "

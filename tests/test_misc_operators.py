@@ -370,6 +370,15 @@ def test_profile_table_counts_and_single_scan(spark):
     assert final.count("Scan ExistingRDD") == 1
 
 
+def test_profile_table_repeated_column_profiled_once(spark):
+    from dog_data_pipeline_spark.operators.quality import profile_table
+
+    df = spark.createDataFrame([(1, "a"), (2, None)], "k BIGINT, s STRING")
+    got = profile_table(df, cols=["s", "k", "s"], exact_distinct=True).collect()
+    assert [r["column"] for r in got] == ["s", "k"]
+    assert got[0]["n_null"] == 1 and got[1]["n_distinct"] == 2
+
+
 def test_profile_table_approx_default_close(spark):
     from dog_data_pipeline_spark.operators.quality import profile_table
 

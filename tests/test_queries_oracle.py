@@ -39,6 +39,23 @@ def test_rows_only_query_runs(spark, name):
     assert len(df.columns) > 0
 
 
+@pytest.mark.parametrize("sf", ["sf0.01", "sf0.1"])
+def test_text_quality_profile_matches_oracle_at_larger_scales(spark, sf):
+    """Its rounded scores hit near-ties (x * 10^4 == k + 0.5 in binary)
+    that only the larger scales contain: Spark must round them the way
+    DuckDB does."""
+    import os
+
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), sf)
+    spec = REGISTRY["text_quality_profile"]
+    c = duckdb_con(sf_dir)
+    try:
+        problems = compare(spec.fn(spark, sf_dir), c, spec.oracle)
+    finally:
+        c.close()
+    assert not problems, "; ".join(problems)
+
+
 def test_priority_window_leads_registry_order():
     """The driver verifies registry entries in dict order and caps how
     many it checks (50 per round). `_PRIORITY_ORDER` is the single source

@@ -878,3 +878,75 @@ def test_streaming_stateful_state_survives_restart(spark, tmp_path):
     )
     expected = {r["user_id"]: (r["n"], r["m"]) for r in batch.collect()}
     assert final == expected
+
+
+def test_stream_ivf_ingest_reads_each_batch_once(spark):
+    """The ingest sink must read each micro-batch's source once: the
+    stream's reported input rows equal the rows the query stages."""
+    import time
+
+    import duckdb
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from dog_data_pipeline_spark.queries import REGISTRY
+
+    seen = {"rows": 0, "terminated": 0}
+
+    class _Rows(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            seen["rows"] += event.progress.numInputRows
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            seen["terminated"] += 1
+
+    listener = _Rows()
+    spark.streams.addListener(listener)
+    try:
+        REGISTRY["stream_ivf_ingest"].fn(spark, SF_DIR).collect()
+        deadline = time.time() + 60
+        while seen["terminated"] < 2 and time.time() < deadline:
+            time.sleep(0.2)  # listener events arrive asynchronously
+    finally:
+        spark.streams.removeListener(listener)
+    staged = duckdb.sql(
+        f"SELECT count(*) FROM '{SF_DIR}/embeddings.parquet' WHERE vec_id % 5 = 0"
+    ).fetchone()[0]
+    assert seen["terminated"] == 2
+    assert seen["rows"] == staged
+
+
+@pytest.mark.parametrize("bad_key", [None, -3])
+def test_staged_bounded_streams_reject_unstageable_split_keys(
+    spark, tmp_path, bad_key
+):
+    """A null or negative split key has no bucket in 0..n_files-1: staging
+    must fail loudly instead of silently dropping the row."""
+    from dog_data_pipeline_spark.queries import _staged_bounded_streams
+
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (bad_key, "c")], "k BIGINT, v STRING")
+    good = spark.createDataFrame([(4, "d")], "k BIGINT, v STRING")
+    sides = [(good, str(tmp_path / "l")), (df, str(tmp_path / "r"))]
+    with pytest.raises(ValueError, match="non-negative"):
+        _staged_bounded_streams(spark, sides, str(tmp_path / "stage"), 2, "k")
+    assert not (tmp_path / "stage").exists()
+
+
+def test_staged_bounded_streams_stage_every_row(spark, tmp_path):
+    from dog_data_pipeline_spark.queries import _staged_bounded_streams
+
+    df = spark.createDataFrame([(k, str(k)) for k in range(7)], "k BIGINT, v STRING")
+    sides = [(df.filter("k < 3"), str(tmp_path / "l")), (df.filter("k >= 3"), str(tmp_path / "r"))]
+    _staged_bounded_streams(spark, sides, str(tmp_path / "stage"), 2, "k")
+    staged = sorted(
+        r["k"] for side in ("l", "r")
+        for r in spark.read.parquet(str(tmp_path / side / "src")).collect()
+    )
+    assert staged == list(range(7))
+    assert sorted(p.name for p in (tmp_path / "l" / "src").iterdir()) == [
+        "batch_0.parquet", "batch_1.parquet"]

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -27,25 +28,7 @@ sys.path.insert(0, {root!r})
 from dog_data_pipeline_spark.queries import REGISTRY
 from dog_data_pipeline_spark.session import get_spark
 from bench import _checksum
-from pyspark.sql import SparkSession
-cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-spark = (SparkSession.builder.appName("profile-query")
-         .master(f"local[{{cpus}}]")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.sql.adaptive.enabled", "true")
-         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-         .config("spark.sql.shuffle.partitions", str(cpus))
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .config("spark.sql.autoBroadcastJoinThreshold", str(64*1024*1024))
-         .config("spark.driver.memory", "24g")
-         .config("spark.driver.maxResultSize", "4g")
-         .config("spark.ui.enabled", "false")
-         .config("spark.eventLog.enabled", "true")
-         .config("spark.eventLog.dir", {evdir!r})
-         .config("spark.eventLog.compress", "false")
-         .config("spark.eventLog.rolling.enabled", "false")
-         .getOrCreate())
+spark = get_spark(app_name="profile-query")
 spark.sparkContext.setLogLevel("ERROR")
 from dog_data_pipeline_spark.tables import TABLE_NAMES, load
 for t in TABLE_NAMES:
@@ -117,10 +100,20 @@ def main() -> None:
     if len(names) != 1:
         sys.exit("usage: profile_query.py <query> [--sf DIR] [--runs N]")
     name = names[0]
-    evdir = tempfile.mkdtemp(prefix="ddps_evlog_")
-    child = _CHILD.format(root=HERE, sf=sf, name=name, runs=runs, evdir=evdir)
+    evdir = tempfile.mkdtemp(prefix="profile_evlog_")
+    child = _CHILD.format(root=HERE, sf=sf, name=name, runs=runs)
+    # the event log is a launch-time setting: it reaches get_spark's
+    # session through spark-submit's arguments
+    conf = {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": "file://" + evdir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+    submit = " ".join(f"--conf {k}={v}" for k, v in conf.items())
     proc = subprocess.run(
-        [sys.executable, "-c", child], capture_output=True, text=True
+        [sys.executable, "-c", child], capture_output=True, text=True,
+        env=dict(os.environ, PYSPARK_SUBMIT_ARGS=submit + " pyspark-shell"),
     )
     walls, appid = None, None
     for ln in proc.stdout.splitlines():
@@ -145,6 +138,7 @@ def main() -> None:
         else:
             evpath = alt
     jobs = parse_eventlog(evpath)
+    shutil.rmtree(evdir, ignore_errors=True)
     # attribute jobs to profile runs via the job description
     per_run: dict[str, list[dict]] = {}
     for j in jobs:
