@@ -3115,59 +3115,12 @@ def _staged_bounded_stream(spark, df, tmp: str, n_files: int, split_col: str):
     a partition dir, each group's single data file (written WITHOUT the
     partition column, so the file schema is exactly ``df.schema``)
     moves to the flat source dir — n_files full input scans become
-    one."""
+    one. A null or negative ``split_col`` has no bucket in
+    0..n_files-1 and raises instead of being dropped."""
     import os
-    import shutil
 
     stage = os.path.join(tmp, "stage")
-    (
-        df.withColumn("__b", F.col(split_col) % n_files)
-        .repartition(n_files, "__b")
-        .write.partitionBy("__b")
-        .mode("overwrite")
-        .parquet(stage)
-    )
-    try:
-        src = _take_staged_batches(stage, tmp, n_files, split_col)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-
-def _take_staged_batches(bucket_root: str, tmp: str, n_files: int, split_col: str) -> str:
-    """Move the single data file of each ``__b=k`` dir under
-    ``bucket_root`` to ``{tmp}/src/batch_{k}.parquet``; return that
-    source dir. A row whose ``split_col`` is null or negative lands in a
-    bucket outside 0..n_files-1 that would never be staged: raise
-    instead of dropping it."""
-    import os
-
-    src = os.path.join(tmp, "src")
-    os.makedirs(src, exist_ok=True)
-    if not os.path.isdir(bucket_root):  # an empty side stages nothing
-        return src
-    buckets = {d for d in os.listdir(bucket_root) if d.startswith("__b=")}
-    stray = sorted(buckets - {f"__b={k}" for k in range(n_files)})
-    if stray:
-        raise ValueError(
-            f"{split_col} must be non-null and non-negative to stage a "
-            f"bounded stream; rows landed in {stray}"
-        )
-    for k in range(n_files):
-        bdir = os.path.join(bucket_root, f"__b={k}")
-        if not os.path.isdir(bdir):  # an empty split stages no file
-            continue
-        part = next(
-            f for f in sorted(os.listdir(bdir)) if f.endswith(".parquet")
-        )
-        os.replace(
-            os.path.join(bdir, part), os.path.join(src, f"batch_{k}.parquet")
-        )
-    return src
+    return _staged_bounded_streams(spark, [(df, tmp)], stage, n_files, split_col)[0]
 
 
 def _staged_bounded_streams(
@@ -3176,11 +3129,12 @@ def _staged_bounded_streams(
     """``_staged_bounded_stream`` for SEVERAL same-schema frames in ONE
     partitionBy write (r13 setup trim): the sides union under a side
     tag, one job writes partitionBy(side, bucket) under ``stage``, and
-    each group's single data file moves into its side's flat source dir.
-    Returns one bounded stream per side, identical in file content and
-    replay shape to staging each side separately — the repartition keys
-    on (side, bucket) so every group still lands in exactly one task and
-    stages exactly one file. ``sides`` = [(df, tmp), ...]."""
+    each group's single data file moves to ``{tmp}/src/batch_{k}.parquet``
+    of its side. Returns one bounded stream per side, identical in file
+    content and replay shape to staging each side separately — the
+    repartition keys on (side, bucket) so every group still lands in
+    exactly one task and stages exactly one file. ``sides`` =
+    [(df, tmp), ...]."""
     import os
     import shutil
     from functools import reduce
@@ -3198,13 +3152,34 @@ def _staged_bounded_streams(
         .mode("overwrite")
         .parquet(stage)
     )
+    buckets = {f"__b={k}" for k in range(n_files)}
+    srcs = []
     try:
-        srcs = [
-            _take_staged_batches(
-                os.path.join(stage, f"__side={i}"), tmp, n_files, split_col
+        for i, (_, tmp) in enumerate(sides):
+            side = os.path.join(stage, f"__side={i}")
+            src = os.path.join(tmp, "src")
+            os.makedirs(src, exist_ok=True)
+            srcs.append(src)
+            if not os.path.isdir(side):  # an empty side stages nothing
+                continue
+            stray = sorted(
+                d for d in os.listdir(side) if d.startswith("__b=") and d not in buckets
             )
-            for i, (_, tmp) in enumerate(sides)
-        ]
+            if stray:  # a null or negative key: its rows would never stage
+                raise ValueError(
+                    f"{split_col} must be non-null and non-negative to stage "
+                    f"a bounded stream; rows landed in {stray}"
+                )
+            for k in range(n_files):
+                bdir = os.path.join(side, f"__b={k}")
+                if not os.path.isdir(bdir):  # an empty split stages no file
+                    continue
+                part = next(
+                    f for f in sorted(os.listdir(bdir)) if f.endswith(".parquet")
+                )
+                os.replace(
+                    os.path.join(bdir, part), os.path.join(src, f"batch_{k}.parquet")
+                )
     finally:
         shutil.rmtree(stage, ignore_errors=True)
     return [
