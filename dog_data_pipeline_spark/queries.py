@@ -2629,27 +2629,23 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # through its scan, and returns rows the oracle recomputes from the base
 # tables — a full-fidelity roundtrip certificate (any write/read/schema
 # drift hash-mismatches). Outputs land in a fresh mkdtemp dir under one
-# per-process ``ddps_*`` root in the system temp dir, removed when the
-# interpreter exits (a returned DataFrame may read its files until then).
+# ``ddps_*`` root in the system temp dir, removed when the interpreter
+# exits (a returned DataFrame may read its files until then).
 # ---------------------------------------------------------------------------
 
-_ROUNDTRIP_ROOT: dict[int, str] = {}  # creating pid -> root
+_ROUNDTRIP_ROOT: str | None = None
 
 
 def _roundtrip_dir(name: str) -> str:
+    global _ROUNDTRIP_ROOT
     import atexit
-    import os
     import shutil
     import tempfile
 
-    pid = os.getpid()
-    if pid not in _ROUNDTRIP_ROOT:
-        root = _ROUNDTRIP_ROOT[pid] = tempfile.mkdtemp(prefix="ddps_")
-        # a forked child inherits the handler but must not remove the root
-        atexit.register(
-            lambda: os.getpid() == pid and shutil.rmtree(root, ignore_errors=True)
-        )
-    return tempfile.mkdtemp(prefix=f"{name}_", dir=_ROUNDTRIP_ROOT[pid])
+    if _ROUNDTRIP_ROOT is None:
+        _ROUNDTRIP_ROOT = tempfile.mkdtemp(prefix="ddps_")
+        atexit.register(shutil.rmtree, _ROUNDTRIP_ROOT, ignore_errors=True)
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=_ROUNDTRIP_ROOT)
 
 
 def _arrow_local(spark: SparkSession, pdf, schema: str) -> DataFrame:

@@ -57,3 +57,9 @@ def test_soak_replicates_and_times_two_cpu_legs(tmp_path):
     assert all(f["text_quality_profile"] > 0 for f in out["floors"].values())
     assert out["speedup"]["text_quality_profile"] > 0
     assert out["failed"] == {}
+
+    # a kept copy is not reused: a second run into it stops before Spark starts
+    again = subprocess.run([sys.executable, str(TOOLS / "soak.py"), "--sf", SF_DIR,
+                            "--out", str(rep), "text_quality_profile"],
+                           capture_output=True, text=True, timeout=60)
+    assert again.returncode == 2 and "is not empty" in again.stderr

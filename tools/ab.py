@@ -1,14 +1,15 @@
 """Interleaved fresh-JVM A/B floors of registry queries.
 
     python tools/ab.py [--base DIR] [--head DIR] [--rounds 3] [--repeat 1]
-                       [--sf DIR] [--cpus N] (--all | NAME ...)
+                       [--sf DIR] (--all | NAME ...)
 
 Each round starts one fresh process per checkout (``--head`` defaults to
 this one; ``--base`` is optional).  The process imports that checkout's
-package, starts ``session.get_spark`` on ``local[--cpus]``, scans every
-table once and warms the pandas-UDF worker pool, then times each query
-``--repeat`` times: ``REGISTRY[name].fn`` followed by a sum of
-``xxhash64`` over every output column, so each query is fully evaluated.
+package, starts ``session.get_spark`` (sized by ``SPARK_GRAFT_CPUS`` and
+``SPARK_GRAFT_DRIVER_MEM`` when set), scans every table once and warms the
+pandas-UDF worker pool, then times each query ``--repeat`` times:
+``REGISTRY[name].fn`` followed by that checkout's ``bench._checksum``, so
+each query is fully evaluated.
 Leg order alternates each round, so drift within a round does not always
 tax the same checkout.  Single runs on a shared box swing by tens of
 percent, so compare floors: the minimum over every round and repeat.
@@ -38,6 +39,7 @@ def _leg(spec: dict) -> dict:
     sys.path.insert(0, spec["root"])
     from pyspark.sql import functions as F
 
+    from bench import _checksum
     from dog_data_pipeline_spark.queries import REGISTRY
     from dog_data_pipeline_spark.session import get_spark
     from dog_data_pipeline_spark.tables import load
@@ -59,10 +61,7 @@ def _leg(spec: dict) -> dict:
         if spec["sink"] == "noop":
             df.write.format("noop").mode("overwrite").save()
             return None
-        cols = [F.to_json(df[f.name]) if "map<" in f.dataType.simpleString()
-                else df[f.name] for f in df.schema.fields]
-        return str(df.select(F.sum(F.xxhash64(*cols).cast("decimal(38,0)")))
-                   .collect()[0][0])
+        return str(_checksum(df))
 
     out: dict[str, dict] = {}
     for name in spec["names"]:
@@ -84,23 +83,27 @@ def _leg(spec: dict) -> dict:
     return out
 
 
-def run_leg(root: str, cpus: int, names: list[str], sf: str, repeat: int,
+def run_leg(root: str, cpus: int | None, names: list[str], sf: str, repeat: int,
             sink: str = "checksum") -> dict:
-    """Run ``_leg`` in a fresh interpreter (hence a fresh JVM) on ``cpus``."""
+    """Run ``_leg`` in a fresh interpreter (hence a fresh JVM); a leg that
+    names ``cpus`` sets ``SPARK_GRAFT_CPUS``, otherwise the child inherits
+    this environment and ``get_spark``'s default."""
     spec = dict(root=os.path.abspath(root), names=names, sf=os.path.abspath(sf),
                 repeat=repeat, sink=sink)
-    env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
+    env = dict(os.environ)
+    if cpus is not None:
+        env["SPARK_GRAFT_CPUS"] = str(cpus)
     proc = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--leg", json.dumps(spec)],
         env=env, cwd=tempfile.gettempdir(), capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     if proc.returncode != 0 or not lines:
         sys.stderr.write(proc.stderr[-4000:] + "\n")
-        raise RuntimeError(f"leg failed: {root} on {cpus} CPUs")
+        raise RuntimeError(f"leg failed: {root}")
     return json.loads(lines[-1])
 
 
-def interleave(legs: list[tuple[str, str, int]], names: list[str], sf: str,
+def interleave(legs: list[tuple[str, str, int | None]], names: list[str], sf: str,
                rounds: int, repeat: int, sink: str = "checksum") -> dict:
     """Run every ``(label, root, cpus)`` leg once per round, reversing the
     leg order every other round; fold the runs into per-leg floors."""
@@ -146,7 +149,6 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=3)
     ap.add_argument("--repeat", type=int, default=1, help="timings per query per leg")
     ap.add_argument("--sf", help="table dir (default: the package's DEFAULT_SF_DIR)")
-    ap.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
     args = ap.parse_args()
     sys.path.insert(0, args.head)
     from dog_data_pipeline_spark.queries import REGISTRY
@@ -155,9 +157,9 @@ def main() -> None:
     names = list(REGISTRY) if args.all else args.names
     if not names:
         ap.error("name at least one query, or pass --all")
-    legs = [("head", args.head, args.cpus)]
+    legs = [("head", args.head, None)]
     if args.base:
-        legs.insert(0, ("base", args.base, args.cpus))
+        legs.insert(0, ("base", args.base, None))
     out = interleave(legs, names, args.sf or DEFAULT_SF_DIR, args.rounds, args.repeat)
     if args.base:
         f = out["floors"]

@@ -7,7 +7,8 @@ tables at two or more CPU counts.
 At sf0.1 most queries run in under a second, so the suite measures fixed
 cost; a replicated corpus shows whether a query's work scales with cores.
 First one fresh process writes every table of ``--sf`` to ``--out`` (a
-temporary directory, removed at the end, unless given):
+new or empty directory, kept afterwards; without it a temporary directory,
+removed at the end):
 
 - every table but the 5- and 25-row dimensions ``region`` and ``nation``
   holds ``--replicas`` copies; replica ``r`` adds ``r * stride`` to every
@@ -103,11 +104,14 @@ def main() -> None:
     ap.add_argument("--cpus", default="8,32", help="comma-separated CPU legs")
     ap.add_argument("--rounds", type=int, default=2)
     ap.add_argument("--repeat", type=int, default=2)
-    ap.add_argument("--out", help="keep the replicated tables here")
+    ap.add_argument("--out", help="a new or empty directory to write and keep "
+                                  "the replicated tables in")
     args = ap.parse_args()
     cpus = sorted({int(c) for c in args.cpus.split(",")})
     if len(cpus) < 2:
         ap.error("--cpus needs at least two distinct CPU counts")
+    if args.out and os.path.isdir(args.out) and os.listdir(args.out):
+        ap.error(f"--out {args.out} is not empty")
     sys.path.insert(0, ROOT)
     from dog_data_pipeline_spark.tables import DEFAULT_SF_DIR
 
